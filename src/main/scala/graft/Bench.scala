@@ -1,27 +1,14 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // SPARK_GRAFT_MASTER / executor envs: same multi-JVM hooks as Verify —
-    // the round-15 cluster-mode bench runs the registry under
-    // `local-cluster[2,2,4096]` to measure the cost of real executor
-    // processes (serialization of the custom expressions, broadcast over
-    // an RPC boundary, executor-side state stores), not just correctness.
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val builder0 = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    val spark = Seq(
-      "SPARK_GRAFT_EXECUTOR_CLASSPATH" -> "spark.executor.extraClassPath",
-      "SPARK_GRAFT_EXECUTOR_MEM" -> "spark.executor.memory"
-    ).foldLeft(builder0) { case (b, (env, conf)) =>
-      sys.env.get(env).fold(b)(b.config(conf, _))
-    }.getOrCreate()
+    // SPARK_GRAFT_MASTER / executor envs (GraftSession): the cluster-mode
+    // bench runs the registry under `local-cluster[2,2,4096]` to measure
+    // the cost of real executor processes (serialization of the custom
+    // expressions, broadcast over an RPC boundary, executor-side state
+    // stores), not just correctness.
+    val spark = GraftSession.fromEnv().getOrCreate()
+    val master = spark.sparkContext.master
     spark.sparkContext.setLogLevel("WARN")
     // Warm up the JVM before timing: JIT + codegen + parquet footer reads
     // otherwise land entirely on whichever query happens to run first
@@ -185,9 +172,15 @@ object Bench {
         java.nio.file.Paths.get("bench_last.json"),
         line.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     } catch { case _: Throwable => () }
+    // The stop is bounded: a hung shutdown (a stuck executor or streaming
+    // thread) must not withhold the contract line.
     try {
       spark.sparkContext.setLogLevel("OFF")
-      spark.stop()
+      val stopper = new Thread(() => spark.stop(), "graft-bench-stop")
+      stopper.setDaemon(true)
+      stopper.start()
+      stopper.join(60000)
+      if (stopper.isAlive) System.err.println("[bench] spark.stop() still running after 60 s")
     } catch { case _: Throwable => () }
     finally {
       println(line)

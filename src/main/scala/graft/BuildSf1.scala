@@ -1,13 +1,13 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
 
 /** Synthesize the FULL-table sf1-equivalent universe (10× the sf0.1
-  * grading tables) for the at-scale DuckDB oracle gate — the round-15
-  * extension of RegimeBoundary's `tpch_10x` universe, which scaled only
-  * the five TPC-H fact/dim tables and symlinked the rest.
+  * grading tables) for the at-scale DuckDB oracle gate — it extends the
+  * `tpch_10x` universe recorded in `regime_boundary.json`, which scaled
+  * only the five TPC-H fact/dim tables and symlinked the rest.
   *
   * Construction (one parquet dir per table under `outDir`, all 10 names
   * the Verify/oracle contract expects):
@@ -39,13 +39,7 @@ object BuildSf1 {
   def main(args: Array[String]): Unit = {
     val sfDir = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val outDir = args.lift(1).getOrElse("/tmp/graft_sf1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.fromEnv().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     Files.createDirectories(Paths.get(outDir))
 

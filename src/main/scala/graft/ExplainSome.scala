@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Round-15 optimization evidence tool: dump the executed (AQE-final)
   * formatted plan for the named queries into <plansDir>/<name>_<tag>.txt
   * (plansDir from -Dgraft.plans.dir, default plans/r16).
@@ -16,14 +14,7 @@ object ExplainSome {
     val tag = args(1)
     val names = args.drop(2).toSeq
     val plansDir = System.getProperty("graft.plans.dir", "plans/r16")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.fromEnv().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     Files.createDirectories(Paths.get(plansDir))
     for (name <- names) {

@@ -12,8 +12,8 @@ import scala.jdk.CollectionConverters._
   *
   * Runs under `local-cluster[2,2,4096]` (real executor JVMs forked as
   * child processes) and records four phases into `regime_boundary.json`
-  * under the `fault_injection` key (RegimeBoundary's merge semantics keep
-  * the other probes' entries):
+  * under the `fault_injection` key (the merge keeps the artifact's other
+  * entries):
   *
   *  1. `durable_kill_all`: [[graft.ops.SparkOps.materialize]] with
   *     `graft.checkpoint.dir` set (reliable `checkpoint(eager=true)` to a
@@ -90,23 +90,12 @@ object FaultProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.lift(0).getOrElse("/root/testdata/sf0.01")
     val outPath = args.lift(1).getOrElse("regime_boundary.json")
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", "local-cluster[2,2,4096]")
+    val master = GraftSession.envMaster("local-cluster[2,2,4096]")
     require(master.startsWith("local-cluster"),
       s"FaultProbe needs real executor processes to kill; got master=$master")
     val ckptRoot = s"${System.getProperty("java.io.tmpdir")}/graft_fault_ckpt"
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckptRoot))
-    val builder0 = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .master(master)
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    val spark = Seq(
-      "SPARK_GRAFT_EXECUTOR_CLASSPATH" -> "spark.executor.extraClassPath",
-      "SPARK_GRAFT_EXECUTOR_MEM" -> "spark.executor.memory"
-    ).foldLeft(builder0) { case (b, (env, conf)) =>
-      sys.env.get(env).fold(b)(b.config(conf, _))
-    }.getOrCreate()
+    val spark = GraftSession.builder(master, 8).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     awaitExecutors(spark, 2)
     val results = scala.collection.mutable.LinkedHashMap.empty[String, String]
@@ -239,8 +228,8 @@ object FaultProbe {
         s"""{"error": ${jstr(s"${e.getClass.getName}: ${e.getMessage}")}}"""
     }
 
-    // ---- merge the fault_injection key into the regime artifact (same
-    // read-modify-write shape as RegimeBoundary's round-15 merge)
+    // ---- merge the fault_injection key into the regime artifact
+    // (read-modify-write: every other top-level key is kept as is)
     val merged = scala.collection.mutable.LinkedHashMap.empty[String, String]
     if (Files.exists(Paths.get(outPath))) try {
       val mapper = new com.fasterxml.jackson.databind.ObjectMapper()

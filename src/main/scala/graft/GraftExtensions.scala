@@ -11,8 +11,8 @@ import graft.functions._
   *
   * {{{
   *   spark-submit --conf spark.sql.extensions=graft.GraftExtensions ...
-  *   // or in code:
-  *   SparkSession.builder().withExtensions(new GraftExtensions).getOrCreate()
+  *   // or in code (GraftSession sets the same conf):
+  *   GraftSession.fromEnv().getOrCreate()
   * }}}
   *
   * and every session gets the native functions (codegen'd expressions, not

@@ -109,13 +109,7 @@ object Quickstart {
 
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.fromEnv().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val out = s"${System.getProperty("java.io.tmpdir")}/graft_quickstart_out"
     val trace = curate(spark, dir, out)

@@ -3,7 +3,7 @@ package graft.examples
 import graft.core._
 import graft.ops.SparkOps.Materialize
 import graft.ops.{DedupOps, SparkEnv, SparkOps => O, TextOps}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** End-to-end showcase: a realistic LLM training-data curation pipeline
@@ -20,13 +20,7 @@ object TrainingDataPipeline {
 
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.fromEnv().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     val out = s"${System.getProperty("java.io.tmpdir")}/graft_curated_corpus"

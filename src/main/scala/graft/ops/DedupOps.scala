@@ -1073,7 +1073,7 @@ object DedupOps {
       // max(struct): BOTH are declarative aggregates that plan a partial
       // SortAggregate here (struct-typed buffers are not
       // hash-aggregable in this Spark version — see the recorded plan in
-      // PLANS.md), but max_by A/B-measured ~15-20% faster at sf0.1 over
+      // plans/r15/dedup_decontaminate_before.txt), but max_by A/B-measured ~15-20% faster at sf0.1 over
       // alternating runs — its update compares the ordering struct
       // without also threading the comparison through the value side the
       // way struct-max's GreaterThan-on-the-whole-buffer does. Ties in

@@ -170,22 +170,8 @@ object SparkOps {
     * (`spark.sql.execution.sortBeforeRepartition`, on by default).
     */
   def widen[T](ds: org.apache.spark.sql.Dataset[T]): org.apache.spark.sql.Dataset[T] = {
-    // -Dgraft.widen.off / GRAFT_WIDEN_OFF: measurement/operational escape
-    // hatch — restores the raw scan parallelism (used by the round-16 A/B
-    // drivers and the before-plan captures).
-    if (System.getProperty("graft.widen.off") != null ||
-        sys.env.contains("GRAFT_WIDEN_OFF")) ds
-    else {
-      val width =
-        ds.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-      if (ds.rdd.getNumPartitions * 2 <= width) ds.repartition(width) else ds
-    }
-  }
-
-  /** Syntax for [[widen]], mirroring [[Materialize]]. */
-  implicit class Widen[T](private val ds: org.apache.spark.sql.Dataset[T])
-      extends AnyVal {
-    def widened: org.apache.spark.sql.Dataset[T] = SparkOps.widen(ds)
+    val width = ds.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+    if (ds.rdd.getNumPartitions * 2 <= width) ds.repartition(width) else ds
   }
 
   /** Mining caches outside [[graft.ops]] (e.g. the ER fuzzy pair cache in

@@ -28,11 +28,11 @@ object Tables {
     val f = new java.io.File(path)
     if (!f.exists()) s.read.parquet(path)
     else {
-      // Round-16 (VERDICT r15 #3 / ADVICE): a parquet DIRECTORY keys on the
-      // max mtime and summed length of its entries, not the directory
-      // entry's own mtime — rewriting a part file IN PLACE (same name)
-      // bumps neither the dir mtime nor a (-1) length sentinel, so the old
-      // key could silently serve a stale schema after regeneration. The
+      // A parquet DIRECTORY keys on the max mtime and summed file length
+      // of everything under it, walked recursively (partitioned layouts
+      // nest their part files), not on the directory entry's own mtime —
+      // rewriting a part file IN PLACE (same name) bumps no directory
+      // mtime, so such a key could silently serve a stale schema. The
       // canonical-path component also folds in the one session conf that
       // changes what inference RETURNS for the same bytes
       // (nanosAsLong: TIMESTAMP(NANOS) reads as LongType vs an error), so
@@ -44,9 +44,12 @@ object Tables {
       val key =
         if (f.isFile) (pathKey, f.lastModified(), f.length())
         else {
-          val parts = Option(f.listFiles()).getOrElse(Array.empty[java.io.File])
-          val maxMtime = (f.lastModified() +: parts.map(_.lastModified())).max
-          (pathKey, maxMtime, parts.map(_.length()).sum)
+          def under(d: java.io.File): Seq[java.io.File] =
+            Option(d.listFiles()).fold(Seq.empty[java.io.File])(_.toSeq
+              .flatMap(c => c +: (if (c.isDirectory) under(c) else Nil)))
+          val entries = under(f)
+          val maxMtime = (f.lastModified() +: entries.map(_.lastModified())).max
+          (pathKey, maxMtime, entries.filter(_.isFile).map(_.length()).sum)
         }
       val sch = schemaMemo.memoize(key)(s.read.parquet(path).schema)(_ => ())
       s.read.schema(sch).parquet(path)

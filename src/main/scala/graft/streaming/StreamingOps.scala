@@ -109,8 +109,8 @@ object StreamingOps {
     * ~12% worse at 8 vs 4, ~17% better at 2 vs 4, worse again at 1 where
     * the big aggregates lose their reduce parallelism; outputs are
     * partitioning-invariant — A/B-hashed across 1/2/4 at sf0.01 AND
-    * sf0.1); a production deployment against a firehose sets it to match
-    * its executor fleet before the first start.
+    * sf0.1). The replay fixes it at 2; a job against a firehose would
+    * size it to its executor fleet instead.
     *
     * Trailing NO-DATA batches (`noDataMicroBatches.enabled`) are OFF by
     * default: the replay stagings advance watermarks with real flush-wave
@@ -181,15 +181,6 @@ object StreamingOps {
       jobs: Seq[StreamJob],
       afterStart: () => Unit = () => ()): Map[String, DataFrame] = {
     val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    // Global provider override (`graft.stream.stateProvider=rocksdb` sysprop
-    // or GRAFT_STATE_PROVIDER env): flips EVERY wave member to the RocksDB
-    // provider — the configuration a high-cardinality 100 TB deployment
-    // runs (state on local SSD, working set in block cache) and what the
-    // round-15 `streaming_wave_100x_rocksdb` regime probe measures.
-    // Per-job `rocksDb = true` members are unaffected (already RocksDB).
-    val forceRocks = "rocksdb".equalsIgnoreCase(
-      System.getProperty("graft.stream.stateProvider",
-        sys.env.getOrElse("GRAFT_STATE_PROVIDER", "")))
     val prevNd = spark.conf.get("spark.sql.streaming.noDataMicroBatches.enabled")
     val prevProvider = spark.conf.getOption(providerKey)
     // Changelog checkpointing must accompany the RocksDB provider: without
@@ -217,12 +208,6 @@ object StreamingOps {
     PartitionsScope.enter(spark)
     val started = scala.collection.mutable.ArrayBuffer
       .empty[(StreamJob, String, org.apache.spark.sql.streaming.StreamingQuery)]
-    val debug = System.getProperty("graft.stream.debug") != null ||
-      sys.env.contains("GRAFT_STREAM_DEBUG")
-    val t0 = System.nanoTime()
-    def dbg(msg: => String): Unit =
-      if (debug) System.err.println(
-        f"[wave +${(System.nanoTime() - t0) / 1e9}%6.2fs] $msg")
     try {
       // Round-16: start jobs in CONF GROUPS, concurrently within a group.
       // `start()` clones the session (capturing the conf in force at ITS
@@ -230,17 +215,21 @@ object StreamingOps {
       // provider) — so jobs sharing the same flip tuple can start in
       // parallel without racing the shared conf. The sequential loop paid
       // ~0.13-0.45 s of driver-side planning PER start (16 members ≈ 4 s
-      // of the wave wall, traced under GRAFT_STREAM_DEBUG); grouped
-      // concurrent starts overlap that planning. groupBy preserves member
-      // order within a group; `started` is re-assembled in `jobs` order so
+      // of the wave wall); grouped concurrent starts overlap that planning.
+      // Groups start in first-appearance order and members keep their order
+      // within a group; `started` is re-assembled in `jobs` order so
       // downstream accounting (first-member wave attribution) is unchanged.
-      val byConf = jobs.zipWithIndex
-        .groupBy { case (j, _) => (j.needsNoDataBatches, j.rocksDb || forceRocks) }
+      // A failed start stops the wave before the next group launches.
+      val indexed = jobs.zipWithIndex
+      val confOf = (j: StreamJob) => (j.needsNoDataBatches, j.rocksDb)
       val startFailure =
         new java.util.concurrent.atomic.AtomicReference[Throwable]()
       val startedByIdx = new java.util.concurrent.ConcurrentHashMap[
         Int, (StreamJob, String, org.apache.spark.sql.streaming.StreamingQuery)]()
-      byConf.foreach { case ((noData, rocks), members) =>
+      val confs = indexed.map(p => confOf(p._1)).distinct
+      confs.iterator.takeWhile(_ => startFailure.get() == null).foreach { conf =>
+        val (noData, rocks) = conf
+        val members = indexed.filter(p => confOf(p._1) == conf)
         spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled",
           noData.toString)
         if (rocks) {
@@ -257,7 +246,6 @@ object StreamingOps {
                 .queryName(table)
                 .outputMode(job.mode)
                 .start()
-              dbg(s"started ${job.name}")
               startedByIdx.put(idx, (job, table, q))
             } catch {
               case t: Throwable => startFailure.compareAndSet(null,
@@ -296,9 +284,6 @@ object StreamingOps {
             progressByName.put(job.name, progress)
             lastProgressRef.set(progress)
             q.stop()
-            dbg(s"drained ${job.name} batches=[${
-              progress.map(_.batchDuration).mkString(",")}] lastEnd=${
-              progress.lastOption.map(_.timestamp).getOrElse("-")}")
           } catch {
             case t: Throwable => failure.compareAndSet(null,
               new RuntimeException(s"streaming job ${job.name} failed", t))
@@ -324,10 +309,10 @@ object StreamingOps {
   }
 
   /** Reentrant, thread-counted scope for the streaming shuffle-partition
-    * override: the first enter saves the session value and applies the
-    * `graft.stream.partitions` knob (default 2 — see [[runToTable]] docs
-    * for the measurement); the last exit restores. Counting makes
-    * concurrent family members (wave + overlapped bespoke loops) safe —
+    * override: the first enter saves the session value and sets 2 (see
+    * [[runToTable]] docs for the measurement); the last exit restores.
+    * Counting makes concurrent family members (wave + overlapped bespoke
+    * loops) safe —
     * a plain save/set/restore per call would let one caller's restore
     * clobber another's still-running scope.
     */
@@ -344,8 +329,7 @@ object StreamingOps {
         case Some((d, prev)) => state(id) = (d + 1, prev)
         case None =>
           val prev = spark.conf.get("spark.sql.shuffle.partitions")
-          spark.conf.set("spark.sql.shuffle.partitions",
-            System.getProperty("graft.stream.partitions", "2"))
+          spark.conf.set("spark.sql.shuffle.partitions", "2")
           state(id) = (1, prev)
       }
     }
@@ -402,35 +386,26 @@ object StreamingOps {
         "stream_checkpoint_restart" -> (() => checkpointRestartCounts(spark, dir)),
         "stream_state_reader" -> (() => stateStoreRead(spark, dir)),
         "stream_observed_totals" -> (() => observedTotalsDf(spark, dir)))
-      val t0 = System.nanoTime()
-      val debug = System.getProperty("graft.stream.debug") != null ||
-        sys.env.contains("GRAFT_STREAM_DEBUG")
-      def dbg(msg: => String): Unit =
-        if (debug) System.err.println(
-          f"[family +${(System.nanoTime() - t0) / 1e9}%6.2fs] $msg")
       var futures = Seq.empty[(String, Future[DataFrame])]
       val wave = runJobs(spark, dir, familyJobs,
         afterStart = () =>
           futures = bespoke.map { case (n, f) =>
-            n -> Future { val r = f(); dbg(s"bespoke done $n"); r }(ec)
+            n -> Future(f())(ec)
           })
-      dbg("wave done")
       val all = wave.toSeq ++ futures.map { case (n, fut) =>
         n -> Await.result(fut, Duration.Inf)
       }
-      dbg("bespoke awaited")
       // Materialize each memoized result once (in parallel) so later
       // accesses — bench counts, verify writes, spec compares — read the
       // cached rows instead of re-running the post-projection over the
       // memory table / state source on every action.
       val mat = all.map { case (n, df) =>
         val cached = df.cache()
-        n -> Future { cached.count(); dbg(s"materialized $n"); cached }(ec)
+        n -> Future { cached.count(); cached }(ec)
       }
       val out = mat.map { case (n, fut) =>
         n -> Await.result(fut, Duration.Inf)
       }.toMap
-      dbg("materialized all")
       ok = true
       out
     } finally {

@@ -15,12 +15,8 @@ class GraftExtensionsSpec extends AnyFunSuite {
     val prevActive = SparkSession.getActiveSession
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    val s = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .master("local[2]")
+    val s = GraftSession.local(2)
       .appName("graft-extensions-test")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
       .withExtensions(new GraftExtensions)
       .getOrCreate()
     try f(s)

@@ -6,12 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 class FunctionsSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-    .master("local[4]")
+  lazy val spark: SparkSession = graft.GraftSession.local(4)
     .appName("graft-fn-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
     .getOrCreate()
 
   test("native cosine_sim matches the composed zip_with form exactly") {

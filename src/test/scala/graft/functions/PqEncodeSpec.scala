@@ -17,12 +17,8 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class PqEncodeSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-    .master("local[4]")
+  lazy val spark: SparkSession = graft.GraftSession.local(4)
     .appName("graft-pqencode-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
     .getOrCreate()
 
   /** embeddings plus a materialized `nemb` column (checkpoint barrier —

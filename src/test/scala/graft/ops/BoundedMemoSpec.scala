@@ -1,6 +1,5 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The round-15 cache bound: session-scoped memo maps evict LRU past
@@ -63,12 +62,8 @@ class BoundedMemoSpec extends AnyFunSuite {
     val prev = sys.props.get("graft.cache.maxEntries")
     sys.props("graft.cache.maxEntries") = "1"
     try {
-      val spark = SparkSession.builder()
-        .config("spark.sql.extensions", "graft.GraftExtensions")
-        .master("local[4]")
+      val spark = graft.GraftSession.local(4)
         .appName("graft-bounded-memo-test")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.ui.enabled", "false")
         .getOrCreate()
       import spark.implicits._
       DedupOps.clearCaches(spark)

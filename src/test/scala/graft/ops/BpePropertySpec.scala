@@ -20,12 +20,8 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class BpePropertySpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-    .master("local[4]")
+  lazy val spark: SparkSession = graft.GraftSession.local(4)
     .appName("graft-bpe-prop-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
     .getOrCreate()
 
   /** One regex pass of ` a b ` → ` ab ` simulated on the symbol list: a

@@ -11,12 +11,8 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class CacheInvalidationSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-    .master("local[4]")
+  lazy val spark: SparkSession = graft.GraftSession.local(4)
     .appName("graft-cache-invalidation-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
     .getOrCreate()
 
   private val snapshot =
@@ -113,5 +109,39 @@ class CacheInvalidationSpec extends AnyFunSuite {
     val sch2 = graft.queries.Tables.readPath(spark, dir.toString).schema
     assert(sch2.fieldNames.toSet == Set("a", "b", "c"),
       "in-place part rewrite must invalidate the schema memo")
+  }
+
+  test("schema memo invalidates on a nested part-file rewrite (partitioned layout)") {
+    // A partitionBy table nests its part files one level down. Rewriting
+    // one of them in place (same name, extra column) creates no directory
+    // entry, so neither the table dir nor the partition dir changes; the
+    // memo key must come from the nested file itself.
+    val s = spark
+    import s.implicits._
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val tmp = System.getProperty("java.io.tmpdir")
+    val table = Paths.get(s"$tmp/graft_schema_memo_nested")
+    val staging = s"$tmp/graft_schema_memo_nested_staging"
+    Seq((1L, 2L, 7L)).toDF("a", "b", "k")
+      .coalesce(1).write.mode("overwrite").partitionBy("k").parquet(table.toString)
+    // Checksum sidecars would reject the rewritten bytes; drop them before
+    // the first read so the rewrite below is the only change.
+    Files.walk(table).iterator().asScala.toSeq
+      .filter(_.getFileName.toString.endsWith(".crc")).foreach(Files.delete)
+    val sch1 = graft.queries.Tables.readPath(spark, table.toString).schema
+    assert(sch1.fieldNames.toSet == Set("a", "b", "k"))
+
+    val part = Files.walk(table).iterator().asScala
+      .filter(_.getFileName.toString.endsWith(".parquet")).toSeq.head
+    assert(part.getParent.getFileName.toString == "k=7")
+    Seq((1L, 2L, "x")).toDF("a", "b", "c")
+      .coalesce(1).write.mode("overwrite").parquet(staging)
+    val wider = Files.list(Paths.get(staging)).iterator().asScala
+      .filter(_.getFileName.toString.endsWith(".parquet")).toSeq.head
+    Files.write(part, Files.readAllBytes(wider))
+    val sch2 = graft.queries.Tables.readPath(spark, table.toString).schema
+    assert(sch2.fieldNames.toSet == Set("a", "b", "c", "k"),
+      "a nested in-place part rewrite must invalidate the schema memo")
   }
 }

@@ -9,12 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class GraphTextOpsSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-    .master("local[4]")
+  lazy val spark: SparkSession = graft.GraftSession.local(4)
     .appName("graft-graphtext-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
     .getOrCreate()
 
   test("connectedComponents labels a path, a separate edge, and a singleton") {

@@ -8,13 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class PipelineOpsSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-    .master("local[4]")
+  lazy val spark: SparkSession = graft.GraftSession.local(4)
     .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
     .getOrCreate()
 
   private def docsDf(rows: (Long, String)*) = {

@@ -7,12 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 class TopKPerGroupSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-    .master("local[4]")
+  lazy val spark: SparkSession = graft.GraftSession.local(4)
     .appName("graft-topk-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
     .getOrCreate()
 
   test("matches the window formulation on random data") {

@@ -12,13 +12,8 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class FixturesSpec extends AnyFunSuite {
 
-  private lazy val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-    .master("local[4]")
+  private lazy val spark = graft.GraftSession.local(4)
     .appName("fixtures-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
     .getOrCreate()
 
   private val dir = "/root/testdata/sf0.001"

@@ -10,29 +10,20 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class PlanShapeSpec extends AnyFunSuite {
 
-  // GRAFT_PLANSPEC_MASTER (round 15): run the same plan fences under a
-  // multi-JVM master (`local-cluster[2,2,4096]`, with the compiled classes
-  // shipped via GRAFT_PLANSPEC_EXEC_CP) — plan SHAPE must not change when
+  // SPARK_GRAFT_MASTER runs the same plan fences under a multi-JVM master
+  // (`local-cluster[2,2,4096]`, with the compiled classes shipped via
+  // SPARK_GRAFT_EXECUTOR_CLASSPATH) — plan SHAPE must not change when
   // executors become real processes, and this is the measured check.
-  lazy val spark: SparkSession = {
-    val b = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .master(sys.env.getOrElse("GRAFT_PLANSPEC_MASTER", "local[4]"))
+  lazy val spark: SparkSession =
+    graft.GraftSession.builder(graft.GraftSession.envMaster("local[4]"), 4)
       .appName("graft-planshape-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    sys.env.get("GRAFT_PLANSPEC_EXEC_CP")
-      .fold(b)(b.config("spark.executor.extraClassPath", _))
       .getOrCreate()
-  }
 
   // Default: the smallest SF (plan shapes are size-class properties, not
   // size properties). Override with GRAFT_PLANSPEC_DIR to re-verify the
-  // same shapes at a larger universe — round 14 runs this spec against
-  // the synthetic sf1 dir RegimeBoundary's tpch probe builds
-  // (/tmp/graft_regime_tpch10x) to confirm broadcast sides stay correct
-  // when the dims grow 10x beyond bench scale.
+  // same shapes at a larger universe, e.g. the synthetic sf1 dir that
+  // `graft.BuildSf1` writes (/tmp/graft_sf1), to confirm broadcast sides
+  // stay correct when the dims grow 10x beyond bench scale.
   private val dir =
     sys.env.getOrElse("GRAFT_PLANSPEC_DIR", "/root/testdata/sf0.001")
 

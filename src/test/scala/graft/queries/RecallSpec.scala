@@ -20,13 +20,8 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class RecallSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-    .master("local[8]")
+  lazy val spark: SparkSession = graft.GraftSession.local(8)
     .appName("graft-recall-test")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
     .getOrCreate()
 
   // 500 docs / 500 vectors — identical corpus shape to the sf0.01 grading

@@ -20,13 +20,8 @@ class RocksDbStateSpec extends AnyFunSuite {
   private val rocksProvider =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
-  lazy val spark: SparkSession = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-    .master("local[4]")
+  lazy val spark: SparkSession = graft.GraftSession.local(4)
     .appName("graft-rocksdb-state-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
     .getOrCreate()
 
   private val dir = "/root/testdata/sf0.001"

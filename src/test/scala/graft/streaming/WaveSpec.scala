@@ -10,13 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class WaveSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .config("spark.sql.extensions", "graft.GraftExtensions")
-    .master("local[8]")
+  lazy val spark: SparkSession = graft.GraftSession.local(8)
     .appName("graft-wave-test")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
     .getOrCreate()
 
   private val dir = "/root/testdata/sf0.001"
@@ -64,5 +59,27 @@ class WaveSpec extends AnyFunSuite {
     }
     assert(err.getMessage.contains("wave_spec_boom"),
       s"failure did not name the dead job: ${err.getMessage}")
+  }
+
+  test("a failed start stops the wave before the next conf group starts") {
+    val laterBuilds = new java.util.concurrent.atomic.AtomicInteger(0)
+    val dead = StreamingOps.StreamJob(
+      "wave_spec_dead_start", "append",
+      build = (_, _) => throw new IllegalStateException("source unavailable"))
+    // A different conf group (noData batches on) that appears after the
+    // dead member: its build must never run once a start has failed.
+    val later = StreamingOps.StreamJob(
+      "wave_spec_later_group", "complete",
+      build = (s, d) => {
+        laterBuilds.incrementAndGet()
+        StreamingOps.replayEvents(s, d).groupBy("event_type").count()
+      },
+      needsNoDataBatches = true)
+    val err = intercept[RuntimeException] {
+      StreamingOps.runJobs(spark, dir, Seq(dead, later))
+    }
+    assert(err.getMessage.contains("wave_spec_dead_start"),
+      s"failure did not name the dead job: ${err.getMessage}")
+    assert(laterBuilds.get() == 0, "a later conf group started after a failed start")
   }
 }
